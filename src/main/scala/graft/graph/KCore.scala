@@ -247,7 +247,6 @@ object KCore {
     while (grew && hops < expandRounds) {
       val k = math.min(ClosureHopsPerJob, expandRounds - hops)
       hops += k
-      val tB = System.nanoTime()
       val (next, sig2) = graft.operators.Converge
         .checkpointWithSig(expand(rstate, k), "n")
       grew = sig2._1 > nReach

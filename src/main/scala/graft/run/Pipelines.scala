@@ -2,7 +2,7 @@ package graft.run
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.classify.Classifier
@@ -105,7 +105,18 @@ object Pipelines {
   /** §3.2: the NetApp-style 3-step file ingestion as one pipeline —
     * recursive listing → control-table upsert (outer-join+COALESCE,
     * preserving copy status, deriving isAtSource) → rule
-    * classification → copy of pending files → status upsert → run log.
+    * classification → copy of pending files with their status stamp →
+    * control-table overwrite → run log. Each call walks the source tree
+    * once and evaluates the upsert → classify → copy chain once:
+    *  1. the listing is checkpointed: every later step reads that one
+    *     snapshot of the tree, so the walk runs once;
+    *  2. the listing rows carry a presence marker through the upsert
+    *     (stored rows carry NULL), so `isAtSource` is "Y" exactly where
+    *     the marker survives the COALESCE;
+    *  3. one executor pass over the classified rows copies the pending
+    *     files and stamps their `copyStatus`/`copyStatusMs`; that output
+    *     is checkpointed once, and both the counts and the control-table
+    *     write read the checkpoint, so each copy runs exactly once.
     *
     * Scale notes vs the reference: the listing upsert is the K5
     * COALESCE merge (no Delta needed); classification is native
@@ -114,26 +125,30 @@ object Pipelines {
     * driver across 20 notebooks, which caps throughput at one VM.
     * INC semantics: re-copy when modifiedMs advanced past the recorded
     * copy timestamp (`ModuleFunctions.py:633-636`). `nowMs` is
-    * injectable so runs are deterministic under test. */
+    * injectable so runs are deterministic under test; it stamps both
+    * the copies and the run-log row. */
   def fileIngest(spark: SparkSession, spec: JobSpec, sourceRoot: String,
                  targetRoot: String, controlPath: String,
                  rules: Classifier.Rules, runLog: RunLog,
                  nowMs: Long): JobResult = {
-    import spark.implicits._
     val runId = java.util.UUID.randomUUID().toString
-    def log(status: String, n: Long, msg: String): Unit =
-      runLog.append(RunLogEntry(runId, spec.jobId, status, n, n, 0, msg,
-        new Timestamp(0L)))
+    def log(status: String, nIn: Long, nDone: Long, msg: String): Unit =
+      runLog.append(RunLogEntry(runId, spec.jobId, status, nIn, nDone, 0, msg,
+        new Timestamp(nowMs)))
+    val atSource = "__atSrc"
+    val copied = "__copied"
     try {
-      // 1. listing rows for this (jobGroup, jobOrder)
+      // 1. the one walk: listing rows for this (jobGroup, jobOrder),
+      //    marked present at the source
       val listing = Sources.listFiles(spark, sourceRoot).toDF()
         .where(!col("isDir"))
         .select(col("path"), col("name"), col("ext"), col("sizeBytes"),
           col("modifiedMs"),
           lit(spec.jobGroup).as("jobGroup"), lit(spec.jobOrder).as("jobOrder"),
           lit(null).cast("string").as("copyStatus"),
-          lit(null).cast("long").as("copyStatusMs"))
-      val nListed = listing.count()
+          lit(null).cast("long").as("copyStatusMs"),
+          lit(true).as(atSource))
+        .sanitizedCheckpoint()
 
       // 2. upsert into the control table: listing metadata wins, copy
       //    status survives from the previous run (COALESCE merge)
@@ -141,74 +156,66 @@ object Pipelines {
       // fail the run, not silently reset the control table
       val ctlPath = new org.apache.hadoop.fs.Path(controlPath)
       val ctlFs = ctlPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val existing =
-        if (ctlFs.exists(ctlPath)) spark.read.parquet(controlPath) else null
       val keys = Seq("path", "jobGroup", "jobOrder")
-      val merged0 =
-        if (existing == null) listing
+      val merged =
+        if (!ctlFs.exists(ctlPath)) listing
         else {
           // new metadata must win: upsert coalesces incoming first, but
           // a NULL incoming copyStatus falls back to the stored one —
           // exactly the reference's null-refresh trick (Step 1:184-186)
-          Merge.upsert(existing.drop("isAtSource", "isExcluded",
-            "exclusionReason"), listing, keys)
+          val existing = spark.read.parquet(controlPath)
+            .drop("isAtSource", "isExcluded", "exclusionReason")
+            .withColumn(atSource, lit(null).cast("boolean"))
+          Merge.upsert(existing, listing, keys)
         }
-      // 3. isAtSource = still present in this listing; then classify
-      val atSrc = listing.select(col("path").as("__p")).distinct()
-      val merged = merged0
-        .join(atSrc, merged0("path") === atSrc("__p"), "left")
-        .withColumn("isAtSource", when(col("__p").isNotNull, "Y").otherwise("N"))
-        .drop("__p")
-      val classified = Classifier.classify(merged, rules)
+      // 3. isAtSource = the listing's marker survived; then classify
+      val classified = Classifier.classify(merged
+        .withColumn("isAtSource", when(col(atSource), "Y").otherwise("N"))
+        .drop(atSource), rules)
 
       // 4. pending = at-source, not excluded, never copied or modified
       //    since the last copy (INC)
-      val pending = classified.where(col("isAtSource") === "Y" &&
-        !col("isExcluded") &&
-        (col("copyStatus").isNull || col("modifiedMs") > col("copyStatusMs")))
-        .select(col("path"), col("name"))
+      val pending = col("isAtSource") === "Y" && !col("isExcluded") &&
+        (col("copyStatus").isNull || col("modifiedMs") > col("copyStatusMs"))
+      val flagged = classified.withColumn(copied, coalesce(pending, lit(false)))
+      val Seq(iPath, iName, iStatus, iStatusMs, iCopied) =
+        Seq("path", "name", "copyStatus", "copyStatusMs", copied)
+          .map(flagged.schema.fieldIndex)
 
-      // 5. executor-side copy (local/Hadoop FS); one task per partition
-      val copied = pending.as[(String, String)].mapPartitions { it =>
+      // 5. copy + stamp in one executor pass (local/Hadoop FS), one task
+      //    per partition. Eager materialization: the copy is a side
+      //    effect and must run exactly once, while the counts and the
+      //    control-table write both read it (copies stay idempotent via
+      //    overwrite=true for task retries/speculation)
+      val stamped = flagged.mapPartitions { it =>
         val conf = new org.apache.hadoop.conf.Configuration()
-        it.map { case (p, name) =>
-          val src = new org.apache.hadoop.fs.Path(p)
-          val dst = new org.apache.hadoop.fs.Path(targetRoot, name)
-          val fs = src.getFileSystem(conf)
-          org.apache.hadoop.fs.FileUtil.copy(fs, src, dst.getFileSystem(conf),
-            dst, false, true, conf)
-          p
+        it.map { r =>
+          if (!r.getBoolean(iCopied)) r
+          else {
+            val src = new org.apache.hadoop.fs.Path(r.getString(iPath))
+            val dst = new org.apache.hadoop.fs.Path(targetRoot, r.getString(iName))
+            org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src,
+              dst.getFileSystem(conf), dst, false, true, conf)
+            Row.fromSeq(r.toSeq.updated(iStatus, "C").updated(iStatusMs, nowMs))
+          }
         }
-      }.toDF("path")
-        .withColumn("copyStatus", lit("C"))
-        .withColumn("copyStatusMs", lit(nowMs))
-        // eager materialization: the copy is a side effect and must run
-        // exactly once — without this the status join below would
-        // re-execute every copy a second time (copies stay idempotent
-        // via overwrite=true for task retries/speculation)
-        .sanitizedCheckpoint()
-      val nCopied = copied.count()
+      }(Encoders.row(flagged.schema)).sanitizedCheckpoint()
+      // the at-source rows are the listing's rows, one per listed file
+      val counts = stamped.agg(count(when(col("isAtSource") === "Y", 1)),
+        count(when(col(copied), 1))).head()
+      val (nListed, nCopied) = (counts.getLong(0), counts.getLong(1))
 
-      // 6. status upsert + overwrite the control table (stage+rename)
-      val statusCols = classified
-        .join(copied.select(col("path").as("__p"), col("copyStatus").as("__s"),
-          col("copyStatusMs").as("__ts")), classified("path") === col("__p"), "left")
-        .withColumn("copyStatus", coalesce(col("__s"), col("copyStatus")))
-        .withColumn("copyStatusMs", coalesce(col("__ts"), col("copyStatusMs")))
-        .drop("__p", "__s", "__ts")
+      // 6. overwrite the control table (stage+rename)
       val stage = controlPath.stripSuffix("/") + "__stage"
-      statusCols.write.mode(SaveMode.Overwrite).parquet(stage)
-      val fs = new org.apache.hadoop.fs.Path(controlPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(controlPath), true)
-      fs.rename(new org.apache.hadoop.fs.Path(stage),
-        new org.apache.hadoop.fs.Path(controlPath))
+      stamped.drop(copied).write.mode(SaveMode.Overwrite).parquet(stage)
+      ctlFs.delete(ctlPath, true)
+      ctlFs.rename(new org.apache.hadoop.fs.Path(stage), ctlPath)
 
-      log("S", nListed, s"copied $nCopied")
+      log("S", nListed, nCopied, s"copied $nCopied")
       JobResult(spec.jobId, "S", nCopied, s"listed $nListed copied $nCopied")
     } catch {
       case e: Throwable =>
-        log("F", 0, String.valueOf(e.getMessage))
+        log("F", 0, 0, String.valueOf(e.getMessage))
         JobResult(spec.jobId, "F", 0, String.valueOf(e.getMessage))
     }
   }

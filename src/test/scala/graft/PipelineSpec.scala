@@ -112,6 +112,63 @@ class PipelineSpec extends SparkSpec {
     assert(runLog.read().count() == 3)
   }
 
+  test("fileIngest: a file that leaves the source and comes back keeps its copy status") {
+    val src = tmpDir(); val tgt = tmpDir(); val dir = tmpDir()
+    new java.io.File(s"$src/sub").mkdirs()
+    def put(p: String, body: String): Unit = {
+      val w = new java.io.PrintWriter(p); w.write(body); w.close()
+    }
+    val files = Seq("a.dat", "sub/b.dat", "sub/c.dat", "skip.tmp")
+    files.foreach(f => put(s"$src/$f", f))
+    // whole seconds, so the restored mtime reads back unchanged
+    val mtime = (System.currentTimeMillis() / 1000 - 60) * 1000
+    files.foreach(f => new java.io.File(s"$src/$f").setLastModified(mtime))
+    val runLog = new RunLog(spark, s"$dir/runlog")
+    val spec = JobSpec(8L, 2, 1, "file", src, "ctl", "INC")
+    val rules = Classifier.Rules(excludedExtensions = Seq("tmp"))
+    val control = s"$dir/control"
+    def ingest(nowMs: Long) = Pipelines.fileIngest(spark, spec, src, tgt,
+      control, rules, runLog, nowMs)
+    def status(name: String) = spark.read.parquet(control)
+      .where(col("name") === name)
+      .select("isAtSource", "copyStatus", "copyStatusMs")
+      .as[(String, String, Long)].collect().toSeq
+
+    val t1 = mtime + 1000
+    val r1 = ingest(t1)
+    assert(r1.status == "S" && r1.records == 3, r1.message)
+    val firstSchema = spark.read.parquet(control).schema
+
+    // b.dat leaves the source: its row stays, marked absent, with the
+    // copy status it had; only the files still there count as listed
+    val b = new java.io.File(s"$src/sub/b.dat")
+    assert(b.delete())
+    val r2 = ingest(t1 + 1000)
+    assert(r2.status == "S" && r2.records == 0, r2.message)
+    assert(status("b.dat") == Seq(("N", "C", t1)))
+    assert(status("a.dat") == Seq(("Y", "C", t1)))
+    assert(spark.read.parquet(control).count() == 4)
+    assert(spark.read.parquet(control).schema == firstSchema)
+
+    // b.dat comes back with its old mtime: present again, not recopied
+    put(b.getPath, "sub/b.dat"); b.setLastModified(mtime)
+    assert(new java.io.File(s"$tgt/b.dat").delete())
+    val r3 = ingest(t1 + 2000)
+    assert(r3.status == "S" && r3.records == 0, r3.message)
+    assert(status("b.dat") == Seq(("Y", "C", t1)))
+    assert(!new java.io.File(s"$tgt/b.dat").exists())
+
+    // one run-log row per call: ts = nowMs, recInSource = files listed,
+    // recProcessed = files copied
+    val log = runLog.read().orderBy("ts")
+      .select("status", "recInSource", "recProcessed", "recFailed", "ts")
+      .as[(String, Long, Long, Long, java.sql.Timestamp)].collect().toSeq
+    assert(log == Seq(
+      ("S", 4L, 3L, 0L, new java.sql.Timestamp(t1)),
+      ("S", 3L, 0L, 0L, new java.sql.Timestamp(t1 + 1000)),
+      ("S", 4L, 0L, 0L, new java.sql.Timestamp(t1 + 2000))))
+  }
+
   test("runParallel + retry recovers flaky jobs; summarize aggregates") {
     val attempts = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
     val results = Control.runWithRetries(Seq(1L, 2L, 3L), parallelism = 3) { id =>
